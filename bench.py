@@ -222,8 +222,9 @@ def _measure_scaled(spark, qs) -> dict | None:
     if os.path.basename(SF_DIR.rstrip("/")) != "sf0.1":
         return None  # synthesis ratios documented for the sf0.1 tier
     repo = os.path.dirname(os.path.abspath(__file__))
-    scaled_dir = os.environ.get("NGG_BENCH_SCALED_DIR") or os.path.join(
-        repo, ".benchdata", "sf1"
+    owned_dir = os.path.join(repo, ".benchdata", "sf1")
+    scaled_dir = os.path.abspath(
+        os.environ.get("NGG_BENCH_SCALED_DIR") or owned_dir
     )
     sentinel = os.path.join(scaled_dir, "_SYNTH_OK")
     try:
@@ -231,10 +232,17 @@ def _measure_scaled(spark, qs) -> dict | None:
             import shutil
             import subprocess
 
-            # A dir without the sentinel is an interrupted synthesis —
-            # wipe and rebuild rather than bench against partial tables.
-            shutil.rmtree(scaled_dir, ignore_errors=True)
-            if shutil.disk_usage("/").free < 2 * (1 << 30):
+            if os.path.exists(scaled_dir):
+                # Without the sentinel the dir is an interrupted
+                # synthesis — but only the bench's own dir is wiped and
+                # rebuilt; a user-supplied one is left untouched.
+                if scaled_dir != owned_dir:
+                    return None
+                shutil.rmtree(scaled_dir, ignore_errors=True)
+            probe = os.path.dirname(scaled_dir)
+            while not os.path.exists(probe):
+                probe = os.path.dirname(probe)
+            if shutil.disk_usage(probe).free < 2 * (1 << 30):
                 return None
             subprocess.run(
                 [

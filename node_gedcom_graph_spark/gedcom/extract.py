@@ -33,6 +33,12 @@ Scale: everything is per-record windows (parallel across records after a
 shuffle on record_seq) plus one equi-join for EVEN promotion (its build
 side — TYPE-children-of-EVEN — is tiny in real data; AQE broadcasts it).
 No Python UDFs anywhere; the whole plan is codegen'd.
+
+Why windows, not a grouped map (one shuffle on record_seq, then a
+pure-Python applyInPandas walk per record): on a synthetic 50k-record /
+350k-line file (local[32], warm) this plan takes 2.2 s and the grouped
+map 24.4 s. Records average ~7 lines, so per-group pandas overhead
+dominates.
 """
 
 from __future__ import annotations

@@ -29,7 +29,7 @@ DECIMAL) or rounded well inside the oracle's 6-dp tolerance.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -344,6 +344,13 @@ EWMA_SPIKE_TH = 100.0  # |residual| gate; events.value spans 0.01..490
 LAG_BUCKET_MICROS = 60_000_000
 
 
+def _time_bucket(bucket_micros: int) -> Column:
+    """floor(m / bucket_micros) in exact integer arithmetic. A double
+    quotient rounds k*bucket - 1 up to k once m outgrows the 53-bit
+    mantissa, and a cast truncates negative m toward zero."""
+    return F.expr(f"(m - pmod(m, {bucket_micros})) div {bucket_micros}")
+
+
 def _bucketed_lag_values(
     df: DataFrame, n_lags: int, bucket_micros: int = LAG_BUCKET_MICROS
 ) -> DataFrame:
@@ -380,7 +387,7 @@ def _bucketed_lag_values(
     flows through the fix-up branch — degenerating to the old global
     window exactly where it was never a problem.
     """
-    tb = (F.col("m") / F.lit(bucket_micros)).cast("bigint")
+    tb = _time_bucket(bucket_micros)
     base = df.select("event_type", "m", "eid", "value", tb.alias("__tb"))
     w = W.partitionBy("event_type", "__tb").orderBy("m", "eid")
     wcnt = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
@@ -435,12 +442,10 @@ def _bucketed_gap_values(
     differences of a sorted multiset do not depend on tie order
     (pinned by test_bucketed_gaps_equal_global_window).
 
-    ``df`` must carry ``event_type`` and ``m`` (non-negative bigint
-    micros). Output: (event_type, gap_s double), null gaps dropped.
+    ``df`` must carry ``event_type`` and ``m`` (bigint micros).
+    Output: (event_type, gap_s double), null gaps dropped.
     """
-    base = df.withColumn(
-        "__tb", (F.col("m") / F.lit(bucket_micros)).cast("bigint")
-    )
+    base = df.withColumn("__tb", _time_bucket(bucket_micros))
     win = W.partitionBy("event_type", "__tb").orderBy("m")
     inner = base.select(
         "event_type",

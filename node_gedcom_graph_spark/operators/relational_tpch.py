@@ -17,16 +17,12 @@ apply the identical IEEE expression on both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from node_gedcom_graph_spark.operators import register
+from node_gedcom_graph_spark.operators.relational import _dec
 from node_gedcom_graph_spark.sources.tables import load_table
-
-
-def _dec(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("decimal(18,2)")
 
 
 # ---------------------------------------------------------------------------

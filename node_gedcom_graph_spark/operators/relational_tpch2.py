@@ -14,17 +14,13 @@ magnitude below the oracle hash's 6-dp rounding.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from node_gedcom_graph_spark.operators import register
+from node_gedcom_graph_spark.operators.relational import _dec
 from node_gedcom_graph_spark.sources.tables import load_table
-
-
-def _dec(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("decimal(18,2)")
 
 
 # ---------------------------------------------------------------------------

@@ -144,3 +144,30 @@ def test_register_rejects_unreasoned_zero_floor():
         register("___vacuity_probe3", min_rows=2, empty_reason="x")(
             lambda s, d: None
         )
+
+
+def test_env_knob_census():
+    """The package reads exactly these environment variables, each by a
+    literal name. A new knob must be added here on purpose."""
+    import re
+
+    read = re.compile(
+        r"os\.(?:environ(?:\.get)?\s*[\[(]|getenv\s*\()\s*['\"](\w+)['\"]"
+    )
+    names, n_reads, n_mentions = set(), 0, 0
+    for path in (REPO / "node_gedcom_graph_spark").rglob("*.py"):
+        src = path.read_text()
+        found = read.findall(src)
+        names.update(found)
+        n_reads += len(found)
+        n_mentions += len(re.findall(r"\b(?:environ|getenv)\b", src))
+    assert n_reads == n_mentions, "env read by a non-literal name"
+    assert names == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "NGG_EDGE_CACHE",
+        "NGG_EDGE_CACHE_DIR",
+        "DEDUP_MEMBER_PAIR_CAP",
+        "FUZZY_MEMBER_PAIR_CAP",
+        "FUZZY_BROADCAST_CAP_ROWS",
+    }

@@ -117,81 +117,58 @@ def test_bucketed_gaps_equal_global_window(spark):
     assert got == want and len(got) == 1197
 
 
-def test_numpy_xxh64_matches_spark(spark):
-    """r11 kernel pin: the numpy XXH64 implementation is bit-identical
-    to Spark's xxhash64 (seed 42) across lengths covering every tail
-    path (0 blocks / blocks + 8-byte, 4-byte, 1-byte tails)."""
-    import random
-
+def test_time_buckets_exact_at_edges(spark):
+    """Bucket ids are exact integer floors of m / bucket: rows at
+    k*bucket - 1 and k*bucket split correctly (also past 2^53, where a
+    double quotient rounds up), negative m floors downward, and the
+    bucketed lag and gap outputs still equal the global window."""
+    from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from node_gedcom_graph_spark.xxh64np import xxh64_bytes
-
-    random.seed(7)
-    strings = [
-        "".join(
-            chr(random.randint(32, 126))
-            for _ in range(random.randint(1, 120))
-        )
-        for _ in range(200)
-    ] + ["a" * 32, "b" * 40, "c" * 64, "d" * 39, "e" * 7, "f" * 4, "g"]
-    df = spark.createDataFrame([(s,) for s in strings], "s string")
-    want = [r[0] for r in df.select(F.xxhash64("s")).collect()]
-    got = [xxh64_bytes(s.encode()) for s in strings]
-    assert got == want
-
-
-def test_substr_arrow_hashes_equal_explode(spark):
-    """r11 rewrite pin: the Arrow window-hash kernel emits exactly the
-    explode form's (doc_id, p, h) rows — on the gate fixture and on a
-    synthetic set exercising multi-byte chars (per-window scalar
-    fallback), short docs, empty and null text."""
-    from pyspark.sql import functions as F
-
-    from node_gedcom_graph_spark.operators.dedup import (
-        SUBSTR_W,
-        _pos_window_hashes_arrow,
+    from node_gedcom_graph_spark.operators.distribution import (
+        LAG_BUCKET_MICROS as B,
+        _bucketed_gap_values,
+        _bucketed_lag_values,
+        _time_bucket,
     )
-    from node_gedcom_graph_spark.sources.tables import load_table
 
-    def explode_form(docs, w):
-        return (
-            docs.filter(F.length("text") >= w)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.sequence(F.lit(1), F.length("text") - w + 1)
-                ).alias("p"),
-                "text",
-            )
-            .select(
-                "doc_id",
-                F.col("p").cast("bigint").alias("p"),
-                F.xxhash64(
-                    F.expr(f"substring(text, p, {w})")
-                ).alias("h"),
-            )
-        )
-
-    docs = load_table(spark, SF_DIR, "documents")
-    got = _rows(_pos_window_hashes_arrow(docs, SUBSTR_W))
-    want = _rows(explode_form(docs, SUBSTR_W))
-    assert got == want and len(got) > 100_000
-
-    synth = spark.createDataFrame(
-        [
-            (1, "héllo wörld mixed ascii and accents " * 3),
-            (2, "short"),
-            (3, None),
-            (4, ""),
-            (5, "abcdefghij" * 9),
-            (6, "日本語テキストの重複検出ウィンドウ" * 4),
-        ],
-        "doc_id long, text string",
+    big = (1 << 54) // B
+    ms = [-B - 1, -B, -1, 0, B - 1, B, 2 * B - 1, 2 * B, 5 * B - 1]
+    ms += [big * B - 1, big * B, big * B + 1]
+    rows = [
+        (t, m, i * 2 + k, float(i * 3 + k))
+        for k, t in enumerate(["a", "b"])
+        for i, m in enumerate(ms)
+    ]
+    df = spark.createDataFrame(
+        rows, "event_type string, m long, eid long, value double"
     )
-    got2 = _rows(_pos_window_hashes_arrow(synth, SUBSTR_W))
-    want2 = _rows(explode_form(synth, SUBSTR_W))
-    assert got2 == want2 and len(got2) > 0
+
+    got_tb = sorted(df.select("m", _time_bucket(B)).distinct().collect())
+    assert [tuple(r) for r in got_tb] == [(m, m // B) for m in sorted(ms)]
+
+    wg = W.partitionBy("event_type").orderBy("m", "eid")
+    want_lags = _rows(
+        df.select(
+            "event_type",
+            "m",
+            "eid",
+            "value",
+            *[F.lag("value", j).over(wg).alias(f"x{j}") for j in range(3)],
+        )
+    )
+    assert _rows(_bucketed_lag_values(df, 2)) == want_lags
+
+    gaps = df.select("event_type", "m")
+    wm = W.partitionBy("event_type").orderBy("m")
+    want_gaps = _rows(
+        gaps.select(
+            "event_type",
+            ((F.col("m") - F.lag("m").over(wm)) / F.lit(1e6)).alias("gap_s"),
+        ).filter(F.col("gap_s").isNotNull())
+    )
+    got_gaps = _rows(_bucketed_gap_values(gaps))
+    assert got_gaps == want_gaps and len(got_gaps) == 2 * (len(ms) - 1)
 
 
 def test_incremental_base_state_served_equals_unserved(spark, monkeypatch):
