@@ -11,7 +11,10 @@ subprocess itself is the operator's to run, as in the reference it
 shells out) -> atomically publish staging to the destination with
 backup, mirroring neo4j.js:20-51. Audit sets (unused tags, missing
 temple codes, skipped records — the reference's `missing`/`skip`
-events, index.js:85-90) print to stderr.
+events, index.js:85-90) print to stderr, as does one
+`stage=<read|extract|export|counts|audits|publish> wall_s=<x.xxx>` line
+per stage (the reference's timer.js role). A failure before publish
+deletes the staging dir the CLI created; a `--tmpdir` is never deleted.
 
 Differences from the reference, on purpose: stdin arrives via an
 explicit `--src -` spool-to-temp-file shim rather than a true streaming
@@ -23,8 +26,22 @@ headers (fixes the first-record-wins quirk, SURVEY §7.3), and
 from __future__ import annotations
 
 import argparse
+import contextlib
+import os
+import shutil
 import sys
 import tempfile
+import time
+
+
+@contextlib.contextmanager
+def _stage(name: str):
+    """Log one structured stderr line with the wall time of a CLI stage."""
+    start = time.perf_counter()
+    try:
+        yield
+    finally:
+        print(f"stage={name} wall_s={time.perf_counter() - start:.3f}", file=sys.stderr)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -65,7 +82,7 @@ def main(argv: list[str] | None = None) -> int:
 
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(app_name="gedcom-import", master=args.master)
-    stdin_tmp = None
+    stdin_tmp = created_staging = graph = None
     try:
         src = args.src
         if src == "-":
@@ -74,57 +91,71 @@ def main(argv: list[str] | None = None) -> int:
             # temp file first. Driver-side by necessity — fine, because
             # stdin is single-machine by definition; the spooled file
             # then fans out through the normal splittable read.
-            import os as _os
-
             fd, stdin_tmp = tempfile.mkstemp(prefix="ged-stdin-", suffix=".ged")
-            with _os.fdopen(fd, "w", encoding="utf-8") as fh:
+            with os.fdopen(fd, "w", encoding="utf-8") as fh:
                 fh.write(sys.stdin.read())
             src = stdin_tmp
             print(f"reading STDIN -> {stdin_tmp}", file=sys.stderr)
-        lines = assign_records(read_gedcom_lines(spark, src))
-        graph = extract_graph(lines, persist=True)
+        with _stage("read"):
+            lines = assign_records(read_gedcom_lines(spark, src))
+        with _stage("extract"):
+            graph = extract_graph(lines, persist=True)
 
         # Stage on the SAME filesystem as dest: atomic_publish swaps
         # with os.rename, which cannot cross devices — a /tmp default
         # would export everything and then die with EXDEV when dest
         # lives on another mount.
-        import os
-
         dest_parent = os.path.dirname(os.path.abspath(args.dest)) or "."
         os.makedirs(dest_parent, exist_ok=True)
-        staging = args.tmpdir or tempfile.mkdtemp(
-            prefix="ged2neo-csvs-", dir=dest_parent
-        )
-        outputs = export_neo4j_csvs(graph, staging)
-        counts = observed_counts(graph)
+        if args.tmpdir:
+            staging = args.tmpdir
+        else:
+            staging = created_staging = tempfile.mkdtemp(
+                prefix="ged2neo-csvs-", dir=dest_parent
+            )
+        try:
+            with _stage("export"):
+                outputs = export_neo4j_csvs(graph, staging)
+            with _stage("counts"):
+                counts = observed_counts(graph)
 
-        for name, rows in sorted(counts.items()):
-            print(f"{name}: {rows}", file=sys.stderr)
-        audits = {
-            "unused tags": graph.unused_tags,
-            "missing temple codes": graph.missing_temple_codes,
-            "skipped records": graph.skipped_records,
-        }
-        for label, df in audits.items():
-            vals = [tuple(r) for r in df.collect()]
-            if vals:
-                print(f"{label}: {vals}", file=sys.stderr)
+            for name, rows in sorted(counts.items()):
+                print(f"{name}: {rows}", file=sys.stderr)
+            audits = {
+                "unused tags": graph.unused_tags,
+                "missing temple codes": graph.missing_temple_codes,
+                "skipped records": graph.skipped_records,
+            }
+            with _stage("audits"):
+                for label, df in audits.items():
+                    vals = [tuple(r) for r in df.collect()]
+                    if vals:
+                        print(f"{label}: {vals}", file=sys.stderr)
+
+            with _stage("publish"):
+                if args.run_import and not args.dry_run:
+                    backup = run_import_publish(outputs, args.dest, bindir=args.bindir)
+                    print(
+                        f"imported + published -> {args.dest}"
+                        + (f" (backup: {backup})" if backup else ""),
+                        file=sys.stderr,
+                    )
+                elif not args.dry_run:
+                    backup = atomic_publish(staging, args.dest)
+                    print(f"published {staging} -> {args.dest}"
+                          + (f" (backup: {backup})" if backup else ""), file=sys.stderr)
+        except BaseException:
+            # A failed import must not leave a half-built staging dir
+            # beside --dest; a user-supplied --tmpdir is never deleted.
+            if created_staging is not None:
+                shutil.rmtree(created_staging, ignore_errors=True)
+            raise
 
         if args.run_import and not args.dry_run:
-            backup = run_import_publish(outputs, args.dest, bindir=args.bindir)
-            print(
-                f"imported + published -> {args.dest}"
-                + (f" (backup: {backup})" if backup else ""),
-                file=sys.stderr,
-            )
-            graph.unpersist()
             return 0
         if args.dry_run:
             final_outputs = outputs
         else:
-            backup = atomic_publish(staging, args.dest)
-            print(f"published {staging} -> {args.dest}"
-                  + (f" (backup: {backup})" if backup else ""), file=sys.stderr)
             # The CSVs now live under dest — the argv must point there.
             # (Group name == directory basename by construction in
             # export_neo4j_csvs; joining avoids trailing-slash breakage
@@ -133,14 +164,12 @@ def main(argv: list[str] | None = None) -> int:
         print(" ".join([f"{args.bindir}/neo4j-admin", "database", "import", "full"]
                        + build_import_args(final_outputs,
                                            into=args.dest if not args.dry_run else staging)))
-        graph.unpersist()
         return 0
     finally:
-        if stdin_tmp is not None:
-            import os as _os
-
-            if _os.path.exists(stdin_tmp):
-                _os.remove(stdin_tmp)
+        if graph is not None:
+            graph.unpersist()
+        if stdin_tmp is not None and os.path.exists(stdin_tmp):
+            os.remove(stdin_tmp)
         if owns_session:  # embedded callers (tests) keep their session
             spark.stop()
 

@@ -73,16 +73,30 @@ class GedcomGraph:
         if self.frame is not None:
             self.frame.unpersist()
 
+    def records(self) -> DataFrame:
+        """One row per node: record_seq, record_id, label, root_tag and
+        ``props``, a map flat_key -> value. ``nodes_long`` already holds
+        one row per (record, flat_key), so map keys never collide."""
+        return self.nodes_long.groupBy("record_seq", "record_id", "label", "root_tag").agg(
+            F.map_from_entries(F.collect_list(F.struct("flat_key", "value"))).alias("props")
+        )
+
     def nodes_wide(self, root_tag: str) -> DataFrame:
         """Per-label wide table (the reference's nodes-<TAG>.csv shape):
-        one row per record, one column per flat key."""
-        sub = self.nodes_long.filter(F.col("root_tag") == root_tag)
-        keys = [r[0] for r in sub.select("flat_key").distinct().collect()]
-        return (
-            sub.groupBy("record_seq", "record_id", "label")
-            .pivot("flat_key", sorted(keys))
-            .agg(F.first("value"))
+        one row per record, one column per flat key (sorted)."""
+        recs = self.records().filter(F.col("root_tag") == root_tag)
+        keys = recs.select(F.explode(F.map_keys("props"))).distinct().collect()
+        return recs.select(
+            "record_seq", "record_id", "label", *prop_columns(sorted(k[0] for k in keys))
         )
+
+
+def prop_columns(keys: list[str]) -> list[Column]:
+    """One column per flat key, read from a ``records()`` props map and
+    named by the key verbatim. A map lookup, unlike a column reference,
+    never parses the key, so backticks and dots in user-supplied keys
+    (EVEN TYPE values) are safe; a missing key reads NULL."""
+    return [F.col("props")[k].alias(k) for k in keys]
 
 
 _MAP_EXPR_CACHE: dict[int, Column] = {}

@@ -170,10 +170,10 @@ def gedcom_skipped_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def gedcom_nodes_wide_indi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's nodes-INDI.csv wide shape (op 13/18): one row per
-    Individual record, one column per flat key — via groupBy().pivot()
-    with an explicit key list (no second pass at scale when the key
-    vocabulary is supplied). Projected to three stable keys for the
-    golden oracle."""
+    Individual record, one column per flat key — one lookup per key in
+    the per-record props map (``GedcomGraph.records``), the same
+    projection the CSV export writes. Projected to three stable keys for
+    the golden oracle."""
     from pyspark.sql import functions as F
 
     wide = _demo_graph(spark).nodes_wide("INDI")

@@ -32,17 +32,126 @@ def demo_graph(spark):
 # ------------------------------------------------------------- publish
 
 
+# The DEMO_GEDCOM export as the pivot-based writer produced it (one
+# header line per part file, data lines in any order), with Given Name
+# 'John ' kept untrimmed.
+DEMO_EXPORT = {
+    "nodes-FAM": (
+        "Gedcom Id:ID,Marriage Date,Marriage Temple,:LABEL",
+        ["F1,3 MAR 1921,XXXXX,Family"],
+    ),
+    "nodes-HEAD": ("Character,Gedcom Version,:LABEL", ["UTF-8,5.5,Header"]),
+    "nodes-INDI": (
+        "Gedcom Id:ID,Birth Date,Birth Place,Given Name,Graduation Date,"
+        "LDS Baptism Date,LDS Baptism Place,LDS Baptism Temple,Name,Note,"
+        "Primary,Sex,Surname,:LABEL",
+        [
+            "I1,1 JAN 1900,Boston,John ,,,,,John /Smith/ Jr.,,True,M,Smith,Individual",
+            "I2,,,Mary,5 MAY 1925,2 FEB 1920,Salt Lake City Utah Temple,"
+            "Salt Lake City Utah,Mary,,False,,,Individual",
+            "I3,,,Bobby,,,,,Bobby,,,,Jones,Individual",
+            ",,,,,,,,,idless,,,,Individual",
+        ],
+    ),
+    "relationships-CHIL": (":START_ID,:END_ID,:TYPE", ["F1,I3,Child"]),
+    "relationships-FAMC": (":START_ID,:END_ID,:TYPE", ["I3,F1,Child in Family"]),
+    "relationships-FAMS": (
+        ":START_ID,:END_ID,:TYPE",
+        ["I1,F1,Spouse in Family", "I2,F1,Spouse in Family"],
+    ),
+    "relationships-HUSB": (":START_ID,:END_ID,:TYPE", ["F1,I1,Husband"]),
+    "relationships-SOUR": (":START_ID,:END_ID,:TYPE", ["I1,S1,Source"]),
+    "relationships-WIFE": (":START_ID,:END_ID,:TYPE", ["F1,I2,Wife"]),
+}
+
+
+def _raw_group(path):
+    """(header lines, data lines) of one exported group, read verbatim."""
+    headers, rows = set(), []
+    for part in sorted(os.listdir(path)):
+        if part.startswith((".", "_")):
+            continue
+        with open(os.path.join(path, part), encoding="utf-8") as fh:
+            lines = fh.read().splitlines()
+        if lines:
+            headers.add(lines[0])
+            rows.extend(lines[1:])
+    return headers, sorted(rows)
+
+
 def test_export_neo4j_csvs(spark, demo_graph, tmp_path):
     out = export_neo4j_csvs(demo_graph, str(tmp_path / "stage"))
-    assert set(out) >= {"nodes-INDI", "nodes-FAM", "relationships-HUSB"}
-    indi = spark.read.option("header", True).csv(out["nodes-INDI"])
-    assert "Gedcom Id:ID" in indi.columns and ":LABEL" in indi.columns
-    assert indi.count() == 4
-    ids = {r["Gedcom Id:ID"] for r in indi.collect()}
-    assert {"I1", "I2", "I3"} <= ids
-    husb = spark.read.option("header", True).csv(out["relationships-HUSB"])
-    [row] = husb.collect()
-    assert (row[":START_ID"], row[":END_ID"], row[":TYPE"]) == ("F1", "I1", "Husband")
+    assert set(out) == set(DEMO_EXPORT)
+    for group, (header, rows) in DEMO_EXPORT.items():
+        assert out[group] == str(tmp_path / "stage" / group)
+        assert _raw_group(out[group]) == ({header}, sorted(rows)), group
+    # The writer keeps the raw NAME split piece (no whitespace trimming).
+    indi = _raw_group(out["nodes-INDI"])[1]
+    assert any(",John ," in r for r in indi)
+
+
+def test_export_flat_key_with_backtick(spark, tmp_path):
+    """EVEN TYPE values are user data; a backtick in the promoted key
+    must come out verbatim in the header, not fail the export."""
+    ged = "0 @I1@ INDI\n1 EVEN\n2 TYPE Odd `quoted` thing\n2 DATE 1 JAN 1900\n"
+    g = extract_graph(assign_records(lines_from_string(spark, ged)))
+    out = export_neo4j_csvs(g, str(tmp_path / "stage"))
+    assert _raw_group(out["nodes-INDI"]) == (
+        {"Gedcom Id:ID,Odd `quoted` thing Date,:LABEL"},
+        ["I1,1 JAN 1900,Individual"],
+    )
+
+
+def _group_jobs(sc, group, timeout_s=30.0):
+    """Job ids of ``group`` once the status store shows them all done."""
+    import time
+
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + timeout_s
+    while True:
+        ids = sorted(tracker.getJobIdsForGroup(group))
+        infos = [tracker.getJobInfo(j) for j in ids]
+        if ids and all(i is not None and i.status != "RUNNING" for i in infos):
+            time.sleep(0.2)  # let late job-start events land
+            if sorted(tracker.getJobIdsForGroup(group)) == ids:
+                return ids
+        assert time.monotonic() < deadline, "export jobs never finished"
+        time.sleep(0.1)
+
+
+def test_export_job_economy(spark, tmp_path):
+    """Every export job carries the caller's job group (the group writes
+    run on other threads), and no write job runs more tasks than the
+    session has cores, even when the extraction's shuffles are wider."""
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    tracker = sc.statusTracker()
+    group = "test-export-job-economy"
+    old_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(3 * cores))
+    g = None
+    try:
+        g = extract_graph(
+            assign_records(lines_from_string(spark, DEMO_GEDCOM, n_partitions=2)),
+            persist=True,
+        )
+        sc.setJobGroup(group, group)
+        out = export_neo4j_csvs(g, str(tmp_path / "stage"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.shuffle.partitions", old_partitions)
+        if g is not None:
+            g.unpersist()
+    ids = _group_jobs(sc, group)
+    # Job ids are assigned at submission: an ungrouped job numbered after
+    # the export's first job was submitted by the export without the group.
+    assert [j for j in tracker.getJobIdsForGroup(None) if j > ids[0]] == []
+    # The group writes start after the schema collect returns, so they
+    # are the last jobs; the cached lineage they list runs no tasks.
+    for j in ids[-len(out):]:
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(j).stageIds]
+        tasks = sum(s.numCompletedTasks for s in stages)
+        assert 0 < tasks <= cores, (j, tasks)
 
 
 def test_build_import_args(tmp_path):
@@ -257,6 +366,58 @@ def test_cli_stdin_source(spark, tmp_path, monkeypatch):
     import tempfile as _tempfile
 
     assert not _glob.glob(os.path.join(_tempfile.gettempdir(), "ged-stdin-*"))
+
+
+def test_cli_failed_export_removes_only_created_staging(spark, tmp_path, monkeypatch):
+    """A failure before publish deletes the staging dir the CLI made
+    beside --dest, but never a user-supplied --tmpdir."""
+    import node_gedcom_graph_spark.publish.neo4j_csv as neo4j_csv
+    from node_gedcom_graph_spark.__main__ import main
+
+    def half_export(graph, out_dir):
+        os.makedirs(os.path.join(out_dir, "nodes-HEAD"))
+        raise RuntimeError("injected export failure")
+
+    monkeypatch.setattr(neo4j_csv, "export_neo4j_csvs", half_export)
+    src = tmp_path / "t.ged"
+    src.write_text(DEMO_GEDCOM)
+    dest = tmp_path / "out" / "live"
+    for tmpdir in (None, tmp_path / "user-stage"):
+        argv = ["--src", str(src), "--dest", str(dest), "--master", "local[4]"]
+        if tmpdir is not None:
+            tmpdir.mkdir()
+            (tmpdir / "keep.txt").write_text("user data")
+            argv += ["--tmpdir", str(tmpdir)]
+        with pytest.raises(RuntimeError, match="injected"):
+            main(argv)
+        assert os.listdir(tmp_path / "out") == []  # no staging, no dest
+    assert (tmp_path / "user-stage" / "keep.txt").read_text() == "user data"
+    assert os.path.isdir(tmp_path / "user-stage" / "nodes-HEAD")
+
+
+def test_cli_stage_lines_cover_wall(spark, tmp_path, capsys):
+    """One `stage=<name> wall_s=<x>` stderr line per CLI stage, in order,
+    summing to within 5% of the CLI's wall; the `label: value` count
+    lines stay."""
+    import re
+    import time
+
+    from node_gedcom_graph_spark.__main__ import main
+
+    src = tmp_path / "t.ged"
+    src.write_text(DEMO_GEDCOM)
+    argv = ["--src", str(src), "--dest", str(tmp_path / "live"), "--master", "local[4]"]
+    start = time.perf_counter()
+    assert main(argv) == 0
+    wall = time.perf_counter() - start
+    err = capsys.readouterr().err
+    stages = re.findall(r"^stage=(\w+) wall_s=(\d+\.\d{3})$", err, re.M)
+    assert [name for name, _ in stages] == [
+        "read", "extract", "export", "counts", "audits", "publish",
+    ]
+    total = sum(float(w) for _, w in stages)
+    assert abs(wall - total) <= 0.05 * wall, (wall, stages)
+    assert re.search(r"^n_edges: 7$", err, re.M)
 
 
 # ----------------------------------------------------------- streaming
