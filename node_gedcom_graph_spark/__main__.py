@@ -13,8 +13,11 @@ backup, mirroring neo4j.js:20-51. Audit sets (unused tags, missing
 temple codes, skipped records — the reference's `missing`/`skip`
 events, index.js:85-90) print to stderr, as does one
 `stage=<read|extract|export|counts|audits|publish> wall_s=<x.xxx>` line
-per stage (the reference's timer.js role). A failure before publish
-deletes the staging dir the CLI created; a `--tmpdir` is never deleted.
+per stage (the reference's timer.js role). The extraction is computed
+once: the export, the counts and the audits all read the caches of one
+`extract_graph(persist=True)` graph, released when the CLI returns or
+fails. A failure before publish deletes the staging dir the CLI
+created; a `--tmpdir` is never deleted.
 
 Differences from the reference, on purpose: stdin arrives via an
 explicit `--src -` spool-to-temp-file shim rather than a true streaming
@@ -97,9 +100,11 @@ def main(argv: list[str] | None = None) -> int:
             src = stdin_tmp
             print(f"reading STDIN -> {stdin_tmp}", file=sys.stderr)
         with _stage("read"):
-            lines = assign_records(read_gedcom_lines(spark, src))
+            lines, depth = assign_records(read_gedcom_lines(spark, src), with_depth=True)
         with _stage("extract"):
-            graph = extract_graph(lines, persist=True)
+            # Runs no job: the export, the counts and the audits below
+            # all read the graph's caches, which fill on first use.
+            graph = extract_graph(lines, max_depth=depth, persist=True)
 
         # Stage on the SAME filesystem as dest: atomic_publish swaps
         # with os.rename, which cannot cross devices — a /tmp default

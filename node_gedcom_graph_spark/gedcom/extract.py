@@ -47,6 +47,7 @@ from dataclasses import dataclass
 from functools import lru_cache
 from types import SimpleNamespace
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -60,9 +61,17 @@ from node_gedcom_graph_spark.functions.dictionaries import (
 
 @dataclass
 class GedcomGraph:
-    """Extraction output: the property graph + the two audit sets."""
+    """Extraction output: the property graph + the three audit sets.
+
+    Built with ``persist=True``, the graph owns three caches: ``frame``
+    (the enriched per-line frame every output derives from),
+    ``records`` and ``edges``. Release them with ``unpersist()``."""
 
     nodes_long: DataFrame  # record_seq, record_id, label, root_tag, flat_key, value
+    # One row per node: record_seq, record_id, label, root_tag and
+    # ``props``, a map flat_key -> value. ``nodes_long`` already holds one
+    # row per (record, flat_key), so map keys never collide.
+    records: DataFrame
     edges: DataFrame  # src, dst, rel_type, edge_tag
     unused_tags: DataFrame  # tag
     missing_temple_codes: DataFrame  # code
@@ -71,20 +80,13 @@ class GedcomGraph:
 
     def unpersist(self) -> None:
         if self.frame is not None:
-            self.frame.unpersist()
-
-    def records(self) -> DataFrame:
-        """One row per node: record_seq, record_id, label, root_tag and
-        ``props``, a map flat_key -> value. ``nodes_long`` already holds
-        one row per (record, flat_key), so map keys never collide."""
-        return self.nodes_long.groupBy("record_seq", "record_id", "label", "root_tag").agg(
-            F.map_from_entries(F.collect_list(F.struct("flat_key", "value"))).alias("props")
-        )
+            for df in (self.frame, self.records, self.edges):
+                df.unpersist()
 
     def nodes_wide(self, root_tag: str) -> DataFrame:
         """Per-label wide table (the reference's nodes-<TAG>.csv shape):
         one row per record, one column per flat key (sorted)."""
-        recs = self.records().filter(F.col("root_tag") == root_tag)
+        recs = self.records.filter(F.col("root_tag") == root_tag)
         keys = recs.select(F.explode(F.map_keys("props"))).distinct().collect()
         return recs.select(
             "record_seq", "record_id", "label", *prop_columns(sorted(k[0] for k in keys))
@@ -92,7 +94,7 @@ class GedcomGraph:
 
 
 def prop_columns(keys: list[str]) -> list[Column]:
-    """One column per flat key, read from a ``records()`` props map and
+    """One column per flat key, read from a ``records`` props map and
     named by the key verbatim. A map lookup, unlike a column reference,
     never parses the key, so backticks and dots in user-supplied keys
     (EVEN TYPE values) are safe; a missing key reads NULL."""
@@ -363,14 +365,17 @@ def extract_graph(
     """Run the full extraction over a lines IR that already carries
     ``record_seq`` (see parser.assign_records).
 
-    ``max_depth``: deepest level present; discovered with a cheap scalar
-    aggregate when not supplied (GEDCOM nesting is shallow — spec max 99,
-    practice <10 — so the per-level window columns stay small).
+    ``max_depth``: deepest level present. ``assign_records(lines,
+    with_depth=True)`` returns it from its own collect; when it is not
+    supplied it is discovered with a scalar aggregate, one more job over
+    ``lines`` (GEDCOM nesting is shallow — spec max 99, practice <10 — so
+    the per-level window columns stay small).
 
-    ``persist``: cache the enriched per-line frame (MEMORY_AND_DISK).
-    Set this when materializing more than one of the four outputs in the
-    same job — the standard multi-sink fan-out pattern — so the
-    scan+window pass runs once instead of once per sink. Call
+    ``persist``: cache (MEMORY_AND_DISK) the enriched per-line frame, the
+    per-record props map and the edges, so the CSV export, the counts and
+    the audits all read the one extraction instead of re-running the
+    scan, the Python record pass and the windows per output. Building
+    the graph runs no job; each cache fills on first use. Call
     ``.unpersist()`` on the result when done.
     """
     if max_depth is None:
@@ -382,33 +387,31 @@ def extract_graph(
     df = lines.withColumn("friendly", x.friendly)
     df = df.select("*", *x.pass1)
     df = df.withColumn("label", x.label)
-    # Skip whole records with unknown top-level tags (csv_writer.js:176-180).
-    df = df.filter(F.col("label").isNotNull())
     df = df.withColumn("has_children", x.has_children).drop("_next_level")
-    base = df.select("*", *x.base_cols).drop(*x.lv_drop)
+    frame = df.select("*", *x.base_cols).drop(*x.lv_drop)
     if persist:
-        from pyspark import StorageLevel
-
-        # Persist BEFORE the EVEN-promotion self-join: both join inputs
-        # below derive from this frame, so an unpersisted lineage would
-        # run the whole pass-1 window stack twice per action (the two
-        # branches are separate plan subtrees — exchange reuse does not
-        # apply). The downstream join + single pass-2 window exec are
-        # cheap to recompute per sink against the cached frame.
-        base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    df = base
+        # Persist BEFORE the unknown-top-tag filter and the EVEN-promotion
+        # self-join: the skipped-records audit reads the rows that filter
+        # drops, and both join inputs below derive from this frame, so an
+        # unpersisted lineage would run the whole pass-1 window stack once
+        # per branch (separate plan subtrees — exchange reuse does not
+        # apply). The downstream join and the single pass-2 window exec
+        # then run once for each of the records and edges caches.
+        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+    # Skip whole records with unknown top-level tags (csv_writer.js:176-180).
+    base = frame.filter(F.col("label").isNotNull())
 
     # EVEN Type promotion: value of the LAST direct TYPE child of each
     # EVEN line (max_by line_no = JS last-write-wins).
     type_vals = (
-        df.filter(x.type_of_even)
+        base.filter(x.type_of_even)
         .groupBy(x.even_line_key)
         .agg(x.promoted_agg)
     )
     # Name-based join condition: line_no exists only on the left and
     # _even_line only on the right, so F.col is unambiguous — and unlike
     # df["..."] it doesn't force an eager analyzer pass mid-construction.
-    df = df.join(
+    df = base.join(
         type_vals, F.col("line_no") == F.col("_even_line"), "left"
     ).drop("_even_line")
     df = df.withColumn("segment", x.segment)
@@ -429,27 +432,33 @@ def extract_graph(
         .agg(F.max_by("value", "line_no").alias("value"))
     )
 
-    unused_tags = df.filter(x.unused_filter).select("tag").distinct()
+    # The audits read only per-line columns, so they come straight from
+    # the (cached) frame, not from the post-join lineage.
+    unused_tags = base.filter(x.unused_filter).select("tag").distinct()
     missing_temple_codes = (
-        df.filter(x.missing_temple_filter)
+        base.filter(x.missing_temple_filter)
         .select(F.col("value").alias("code"))
         .distinct()
     )
     # The reference's `skip` event (csv_writer.js:176-180, consumed at
     # index.js:85-87): whole records whose top-level tag has no
-    # dictionary entry. Computed from the raw lines — no window pass.
-    skipped_records = (
-        lines.filter(F.col("level") == 0)
-        .withColumn("_fr", F.element_at(x.tags_map, F.col("tag")))
-        .filter(F.col("_fr").isNull())
-        .select("record_seq", "tag", "xref")
-    )
+    # dictionary entry — the root lines the label filter above drops.
+    skipped_records = frame.filter(
+        (F.col("level") == 0) & F.col("label").isNull()
+    ).select("record_seq", "tag", "xref")
 
+    records = nodes_long.groupBy("record_seq", "record_id", "label", "root_tag").agg(
+        F.map_from_entries(F.collect_list(F.struct("flat_key", "value"))).alias("props")
+    )
+    if persist:
+        records = records.persist(StorageLevel.MEMORY_AND_DISK)
+        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
     return GedcomGraph(
-        nodes_long,
-        edges,
-        unused_tags,
-        missing_temple_codes,
-        skipped_records,
-        frame=base if persist else None,
+        nodes_long=nodes_long,
+        records=records,
+        edges=edges,
+        unused_tags=unused_tags,
+        missing_temple_codes=missing_temple_codes,
+        skipped_records=skipped_records,
+        frame=frame if persist else None,
     )

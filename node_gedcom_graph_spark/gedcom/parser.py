@@ -67,8 +67,16 @@ def lines_from_string(spark: SparkSession, text: str, n_partitions: int = 2) -> 
     return parse_lines(raw)
 
 
-def assign_records(lines: DataFrame) -> DataFrame:
+def assign_records(
+    lines: DataFrame, with_depth: bool = False
+) -> DataFrame | tuple[DataFrame, int]:
     """Add ``record_seq`` (1-based running count of level-0 lines).
+
+    ``with_depth``: return ``(records, max_level)`` instead, where
+    ``max_level`` is the deepest level in ``lines``, read from the same
+    per-partition collect. Handing it to ``extract.extract_graph`` spares
+    that function a ``max(level)`` job of its own, which would re-run the
+    scan and this function's Python pass.
 
     The classic prefix-sum pattern, with ZERO shuffles of the lines
     table:
@@ -96,6 +104,7 @@ def assign_records(lines: DataFrame) -> DataFrame:
         .agg(
             F.sum(F.when(F.col("level") == 0, 1).otherwise(0)).alias("n_recs"),
             F.min("line_no").alias("first_line"),
+            F.max("level").alias("max_level"),
         )
         .collect()
     )
@@ -123,4 +132,7 @@ def assign_records(lines: DataFrame) -> DataFrame:
             pdf["record_seq"] = local + base
             yield pdf
 
-    return lines.mapInPandas(assign, out_schema).filter(F.col("record_seq") > 0)
+    records = lines.mapInPandas(assign, out_schema).filter(F.col("record_seq") > 0)
+    if with_depth:
+        return records, max((row["max_level"] or 0 for row in stats), default=0)
+    return records

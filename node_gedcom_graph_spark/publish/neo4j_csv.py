@@ -17,8 +17,10 @@ Re-expresses the reference's sink + publish machinery:
 
 Scale: each per-tag dataset is written partitioned (many part files) —
 that IS the scalable layout; neo4j-admin import accepts multiple files
-per group. No coalesce(1) anywhere; the export's caches are coalesced to
-``defaultParallelism`` (the cores), not to one partition.
+per group. No coalesce anywhere: AQE sizes the partitions of the graph's
+caches from their bytes (``spark.sql.optimizer.
+canChangeCachedPlanOutputPartitioning``, session.py), so a large group
+is not capped at one partition per core.
 
 Why one cached per-record map, not a pivot per tag: the earlier export
 ran a distinct collect for the node tags, then per tag a key collect
@@ -35,6 +37,21 @@ coalesce for a cached plan. A/B on the perfbench ``ged_import`` workload
 - untraced, 10 alternating pairs, seeds 901-910: end-to-end wall median
   48.2 s (IQR 44.9-50.6) -> 27.2 s (25.2-28.3), faster in 10/10 pairs;
   process CPU median 154.3 s -> 81.0 s.
+
+Why the caches belong to the graph (``extract_graph(persist=True)``),
+not to the export: the export, the counts and the audits then read one
+extraction. Before, ``observed_counts`` re-ran the EVEN join, the pass-2
+window, the explode and the max_by aggregate in two noop writes, and the
+audits and the depth probe each re-ran the scan and the Python record
+pass. A/B on the same workload and host, parent -> graph-owned caches
+plus the cached-plan conf, with the export's coalesce gone:
+
+- traced, seed 12: the Python record pass ran in 1 span instead of 3;
+  tasks to build the extraction cache 66 -> 3, export 98 -> 19, counts
+  97 -> 2, audits 67 -> 5.
+- untraced, 10 alternating pairs, seeds 1101-1110: end-to-end wall
+  median 32.3 s (IQR 29.7-34.4) -> 24.7 s (22.9-27.2), faster in 10/10
+  pairs; process CPU median 91.1 s -> 61.6 s.
 """
 
 from __future__ import annotations
@@ -44,12 +61,53 @@ import shutil
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from node_gedcom_graph_spark.gedcom.extract import GedcomGraph, prop_columns
+
+
+def csv_groups(graph: GedcomGraph) -> dict[str, DataFrame]:
+    """The export's frames, one per nodes-<TAG> / relationships-<TAG>
+    group: each a narrow filter + select over ``graph.records`` or
+    ``graph.edges``. The export schema (each node tag's key set and the
+    edge tags) is one collect."""
+    records, edges = graph.records, graph.edges
+    schema = (
+        records.select(
+            F.lit("nodes").alias("family"),
+            F.col("root_tag").alias("tag"),
+            F.explode(F.map_keys("props")).alias("key"),
+        )
+        .unionByName(
+            edges.select(
+                F.lit("relationships").alias("family"),
+                F.col("edge_tag").alias("tag"),
+                F.lit(None).cast("string").alias("key"),
+            )
+        )
+        .groupBy("family", "tag")
+        .agg(F.collect_set("key").alias("keys"))
+        .collect()
+    )
+    groups: dict[str, DataFrame] = {}
+    for family, tag, keys in schema:
+        if family == "nodes":
+            # 'Gedcom Id:ID' first, like the reference's header.
+            keys = sorted(keys, key=lambda c: (c != "Gedcom Id:ID", c))
+            groups[f"nodes-{tag}"] = records.filter(F.col("root_tag") == tag).select(
+                *prop_columns(keys), F.col("label").alias(":LABEL")
+            )
+        else:
+            groups[f"relationships-{tag}"] = edges.filter(
+                F.col("edge_tag") == tag
+            ).select(
+                F.col("src").alias(":START_ID"),
+                F.col("dst").alias(":END_ID"),
+                F.col("rel_type").alias(":TYPE"),
+            )
+    return groups
 
 
 def export_neo4j_csvs(graph: GedcomGraph, out_dir: str) -> dict[str, str]:
@@ -58,76 +116,38 @@ def export_neo4j_csvs(graph: GedcomGraph, out_dir: str) -> dict[str, str]:
     directory per (family, tag) — the reference's fan-out, lifted to
     partitioned datasets.
 
-    The per-record props map and the edges are built once, cached at
-    ``defaultParallelism`` partitions, and every group is a narrow
-    filter + select over a cache. The export schema (each node tag's
-    key set and the edge tags) is one collect; the group writes then run
-    concurrently, each on a thread that inherits the caller's job group.
+    The groups are ``csv_groups(graph)``; build the graph with
+    ``persist=True`` so the props map and the edges they read are caches
+    (an unpersisted graph recomputes them per group). The group writes
+    run concurrently, each on a thread that inherits the caller's job
+    group.
     """
     os.makedirs(out_dir, exist_ok=True)
     spark = graph.nodes_long.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    records = graph.records().coalesce(parallelism).persist(StorageLevel.MEMORY_AND_DISK)
-    edges = graph.edges.coalesce(parallelism).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        schema = (
-            records.select(
-                F.lit("nodes").alias("family"),
-                F.col("root_tag").alias("tag"),
-                F.explode(F.map_keys("props")).alias("key"),
-            )
-            .unionByName(
-                edges.select(
-                    F.lit("relationships").alias("family"),
-                    F.col("edge_tag").alias("tag"),
-                    F.lit(None).cast("string").alias("key"),
-                )
-            )
-            .groupBy("family", "tag")
-            .agg(F.collect_set("key").alias("keys"))
-            .collect()
+    groups = csv_groups(graph)
+    outputs = {g: os.path.join(out_dir, g) for g in sorted(groups)}
+
+    def write(group: str) -> None:
+        # Spark's CSV writer trims values by default; the extractor
+        # keeps raw pieces such as Given Name 'John '.
+        (
+            groups[group].write.mode("overwrite")
+            .option("header", True)
+            .option("ignoreLeadingWhiteSpace", False)
+            .option("ignoreTrailingWhiteSpace", False)
+            .csv(outputs[group])
         )
-        groups: dict[str, DataFrame] = {}
-        for family, tag, keys in schema:
-            if family == "nodes":
-                # 'Gedcom Id:ID' first, like the reference's header.
-                keys = sorted(keys, key=lambda c: (c != "Gedcom Id:ID", c))
-                groups[f"nodes-{tag}"] = records.filter(F.col("root_tag") == tag).select(
-                    *prop_columns(keys), F.col("label").alias(":LABEL")
-                )
-            else:
-                groups[f"relationships-{tag}"] = edges.filter(
-                    F.col("edge_tag") == tag
-                ).select(
-                    F.col("src").alias(":START_ID"),
-                    F.col("dst").alias(":END_ID"),
-                    F.col("rel_type").alias(":TYPE"),
-                )
-        outputs = {g: os.path.join(out_dir, g) for g in sorted(groups)}
 
-        def write(group: str) -> None:
-            # Spark's CSV writer trims values by default; the extractor
-            # keeps raw pieces such as Given Name 'John '.
-            (
-                groups[group].write.mode("overwrite")
-                .option("header", True)
-                .option("ignoreLeadingWhiteSpace", False)
-                .option("ignoreTrailingWhiteSpace", False)
-                .csv(outputs[group])
-            )
-
-        with ThreadPoolExecutor(max_workers=max(1, min(parallelism, len(groups)))) as pool:
-            # One wrap per task: each thread gets its own copy of the
-            # caller's local properties (job group included).
-            futures = [
-                pool.submit(inheritable_thread_target(spark)(write), g) for g in outputs
-            ]
-            for f in futures:
-                f.result()
-        return outputs
-    finally:
-        records.unpersist()
-        edges.unpersist()
+    workers = max(1, min(spark.sparkContext.defaultParallelism, len(groups)))
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        # One wrap per task: each thread gets its own copy of the
+        # caller's local properties (job group included).
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(write), g) for g in outputs
+        ]
+        for f in futures:
+            f.result()
+    return outputs
 
 
 def build_import_args(outputs: dict[str, str], into: str) -> list[str]:
@@ -227,21 +247,19 @@ def run_import_publish(
 
 
 def observed_counts(graph: GedcomGraph) -> dict[str, int]:
-    """Row-level pipeline metrics via ``df.observe`` (SURVEY op 26: the
-    reference's read/write/skip event counters, re-expressed as
-    accumulator-backed observations riding the job that materializes the
-    data — no second scan, unlike a separate ``count()``).
-    """
-    from pyspark.sql import Observation
+    """Row-level pipeline metrics (SURVEY op 26: the reference's
+    read/write/skip event counters) as two small aggregates over the
+    graph's caches — the per-record props map and the edges the export
+    just wrote from, so on a ``persist=True`` graph nothing upstream of
+    them is recomputed:
 
-    node_obs = Observation("node_metrics")
-    edge_obs = Observation("edge_metrics")
-    nodes = graph.nodes_long.observe(
-        node_obs,
-        F.count(F.lit(1)).alias("n_property_rows"),
+    - ``n_property_rows``: rows of ``nodes_long``, i.e. the sum of the
+      props map sizes (one entry per (record, flat_key));
+    - ``n_records_approx``: ``approx_count_distinct(record_id)``;
+    - ``n_edges``: rows of ``edges``.
+    """
+    nodes = graph.records.agg(
+        F.coalesce(F.sum(F.size("props")), F.lit(0)).alias("n_property_rows"),
         F.approx_count_distinct("record_id").alias("n_records_approx"),
-    )
-    edges = graph.edges.observe(edge_obs, F.count(F.lit(1)).alias("n_edges"))
-    nodes.write.format("noop").mode("overwrite").save()
-    edges.write.format("noop").mode("overwrite").save()
-    return {**node_obs.get, **edge_obs.get}
+    ).first()
+    return {**nodes.asDict(), "n_edges": graph.edges.count()}

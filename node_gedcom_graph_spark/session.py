@@ -23,6 +23,14 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE re-plan (and so coalesce) the shuffles inside a cached
+    # plan. Spark 4.1 leaves it off, so every scan of a persisted frame
+    # ran spark.sql.shuffle.partitions (32) tasks however small the
+    # cache: on the perfbench ged_import workload (local[4]) the
+    # extraction cache took 66 tasks to build and the audits 67; with it
+    # on, 3 and 5. dsir_importance_weights on lineage_llm_prep went from
+    # 340 tasks to 30.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Arrow for pandas-UDF / toPandas transfers.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Arrow-batched UDTF evaluation: without it Python UDTFs fall back
@@ -77,7 +85,7 @@ def get_spark(
     # Static conf (builder-time only — cannot go in ENGINE_CONFS, which
     # is also applied to externally-created sessions via spark.conf.set):
     # the whole-stage-codegen class cache holds 100 entries by default.
-    # This engine's largest plans (the GEDCOM window/pivot stack, the
+    # This engine's largest plans (the GEDCOM window stack, the
     # 64-min MinHash aggregate) generate classes that a mixed workload
     # evicts between runs, re-paying ~1-2 s of janino compilation per
     # query — observed directly in bench.py as a 2x swing on the GEDCOM

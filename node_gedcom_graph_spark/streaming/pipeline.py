@@ -132,8 +132,8 @@ def stream_gedcom_pipeline(
         numbered = batch_df.select(
             F.monotonically_increasing_id().alias("line_no"), "value"
         )
-        lines = assign_records(parse_lines(numbered))
-        g = extract_graph(lines)
+        lines, depth = assign_records(parse_lines(numbered), with_depth=True)
+        g = extract_graph(lines, max_depth=depth)
         g.nodes_long.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(
             f"{out_dir}/nodes"
         )

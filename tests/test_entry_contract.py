@@ -171,3 +171,16 @@ def test_env_knob_census():
         "FUZZY_MEMBER_PAIR_CAP",
         "FUZZY_BROADCAST_CAP_ROWS",
     }
+
+
+def test_engine_confs_are_known_sql_confs(spark):
+    """Spark accepts any string as a conf key, so a misspelled
+    ENGINE_CONFS key would silently do nothing. isModifiable is true only
+    for a known dynamic SQL conf."""
+    from node_gedcom_graph_spark.session import ENGINE_CONFS
+
+    assert not spark.conf.isModifiable(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitionin"
+    )
+    unknown = [k for k in ENGINE_CONFS if not spark.conf.isModifiable(k)]
+    assert unknown == []

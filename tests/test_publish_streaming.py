@@ -154,6 +154,97 @@ def test_export_job_economy(spark, tmp_path):
         assert 0 < tasks <= cores, (j, tasks)
 
 
+def _plan_nodes(plan):
+    """Class names of an executed plan's nodes, through AQE's stages but
+    not into the plans an InMemoryTableScan reads its cache from."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        seq = plan.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    return [name] + [n for k in kids for n in _plan_nodes(k)]
+
+
+def _persistent_rdds(sc):
+    return {int(k): v for k, v in dict(sc._jsc.getPersistentRDDs()).items()}
+
+
+def test_import_computes_once(spark):
+    """The CLI's extraction runs once: building the graph submits no job,
+    its cache is sized by AQE rather than by spark.sql.shuffle.partitions,
+    and the audits and the export's group frames read caches, with no
+    Python pass or window left in their executed plans."""
+    from node_gedcom_graph_spark.publish.neo4j_csv import csv_groups
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    tracker = sc.statusTracker()
+    group = "test-import-computes-once"
+    old_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(3 * cores))
+    g = None
+    try:
+        lines, depth = assign_records(
+            lines_from_string(spark, DEMO_GEDCOM, n_partitions=2), with_depth=True
+        )
+        assert depth == 2
+        sc.setJobGroup(group, group)
+        try:
+            g = extract_graph(lines, max_depth=depth, persist=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(tracker.getJobIdsForGroup(group)) == []
+
+        before = _persistent_rdds(sc)
+        assert g.frame.count() == 42
+        new = [rdd for i, rdd in _persistent_rdds(sc).items() if i not in before]
+        assert len(new) == 1  # the frame only: the other caches fill on use
+        assert new[0].getNumPartitions() <= cores
+
+        frames = {
+            "skipped_records": g.skipped_records,
+            "unused_tags": g.unused_tags,
+            "missing_temple_codes": g.missing_temple_codes,
+            **csv_groups(g),
+        }
+        assert {"nodes-INDI", "relationships-FAMS"} <= set(frames)
+        for name, df in frames.items():
+            df.collect()
+            nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+            assert "InMemoryTableScanExec" in nodes, (name, nodes)
+            bad = [n for n in nodes if "MapInPandas" in n or "Window" in n]
+            assert bad == [], (name, nodes)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old_partitions)
+        if g is not None:
+            g.unpersist()
+
+
+@pytest.mark.parametrize("persist", [True, False])
+def test_observed_counts_keep_values(spark, tmp_path, persist):
+    """The counts read the graph's caches and keep their definitions, on
+    a file with a skipped record, EVEN promotion and pointers."""
+    from node_gedcom_graph_spark.publish.neo4j_csv import observed_counts
+
+    g = extract_graph(
+        assign_records(lines_from_string(spark, DEMO_GEDCOM, n_partitions=2)),
+        persist=persist,
+    )
+    try:
+        if persist:
+            export_neo4j_csvs(g, str(tmp_path / "stage"))
+        m = observed_counts(g)
+        assert m["n_property_rows"] == g.nodes_long.count() == 26
+        assert m["n_edges"] == g.edges.count() == 7
+        approx = g.nodes_long.agg(F.approx_count_distinct("record_id")).first()[0]
+        assert m["n_records_approx"] == approx
+    finally:
+        g.unpersist()
+
+
 def test_build_import_args(tmp_path):
     args = build_import_args(
         {"nodes-INDI": "/x/nodes-INDI", "relationships-HUSB": "/x/relationships-HUSB"},
@@ -393,6 +484,35 @@ def test_cli_failed_export_removes_only_created_staging(spark, tmp_path, monkeyp
         assert os.listdir(tmp_path / "out") == []  # no staging, no dest
     assert (tmp_path / "user-stage" / "keep.txt").read_text() == "user data"
     assert os.path.isdir(tmp_path / "user-stage" / "nodes-HEAD")
+
+
+def test_cli_releases_graph_caches(spark, tmp_path, monkeypatch):
+    """The graph owns three caches; the CLI leaves none behind, neither
+    after a run nor after an export that fails once it has read them."""
+    import node_gedcom_graph_spark.publish.neo4j_csv as neo4j_csv
+    from node_gedcom_graph_spark.__main__ import main
+
+    sc = spark.sparkContext
+    before = set(_persistent_rdds(sc))
+    src = tmp_path / "t.ged"
+    src.write_text(DEMO_GEDCOM)
+    argv = ["--src", str(src), "--master", "local[4]"]
+    assert main(argv + ["--dest", str(tmp_path / "live")]) == 0
+    assert set(_persistent_rdds(sc)) <= before
+
+    export = neo4j_csv.export_neo4j_csvs
+    cached = []
+
+    def failing_export(graph, out_dir):
+        export(graph, out_dir)
+        cached.append(set(_persistent_rdds(sc)) - before)
+        raise RuntimeError("injected export failure")
+
+    monkeypatch.setattr(neo4j_csv, "export_neo4j_csvs", failing_export)
+    with pytest.raises(RuntimeError, match="injected"):
+        main(argv + ["--dest", str(tmp_path / "live2")])
+    assert len(cached[0]) == 3  # frame, props map and edges were filled
+    assert set(_persistent_rdds(sc)) <= before
 
 
 def test_cli_stage_lines_cover_wall(spark, tmp_path, capsys):
